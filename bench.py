@@ -18,8 +18,9 @@ headline set changes):
   host load; r06's driver run at loadavg 6.8 made three sub-second
   queries look 7x slower): the detail artifact additionally records the
   PER-QUERY start loadavg ("queries_loadavg"), and any headline query
-  whose median moved >1.5x vs the most recent BENCH_r*.json artifact is
-  AUTOMATICALLY re-measured with a 5-run median after the main sweep
+  whose median moved >1.5x vs the most recent BENCH_r*.json artifact
+  at the same core count and not load_polluted is AUTOMATICALLY
+  re-measured with a 5-run median after the main sweep
   ("isolated_rechecks") — the same isolated re-measure the r05/r06
   judges ran by hand.  Read isolated_rechecks before believing a
   regression in "queries".
@@ -39,6 +40,7 @@ headline set changes):
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import statistics
@@ -203,7 +205,7 @@ def merge_detail(existing: object, record: dict) -> dict:
     history = merged.get("runs_history")
     if not isinstance(history, list):
         history = []
-    entry = dict(record)
+    entry = copy.deepcopy(record)
     entry["attempt"] = 1 + max(
         (h.get("attempt", 0) for h in history if isinstance(h, dict)), default=0
     )
@@ -212,29 +214,39 @@ def merge_detail(existing: object, record: dict) -> dict:
     return merged
 
 
-def _previous_round_medians() -> dict[str, float]:
-    """Per-query medians from the most recent BENCH_r*.json artifact
-    (the driver records one per round) — the round-over-round reference
-    for the isolated-recheck protocol.  Missing/unparseable artifacts
-    mean no rechecks, never a bench failure."""
+def _previous_round_medians(
+    cpus: str | None = None, here: str | None = None
+) -> dict[str, float]:
+    """Per-query medians from the newest BENCH_r*.json artifact (one is
+    recorded per round) taken at this run's core count and not
+    ``load_polluted`` — the round-over-round reference for the
+    isolated-recheck protocol.  An 8-core or polluted sweep is no
+    baseline for a clean 32-core one.  ``cpus`` defaults to
+    ``$SPARK_GRAFT_CPUS`` (else the host's count, what ``local[*]``
+    uses).  Unparseable artifacts are skipped; none left means no
+    rechecks, never a bench failure."""
     import glob
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    arts = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    if not arts:
-        return {}
-    try:
-        with open(arts[-1]) as f:
-            data = json.load(f)
-        # The driver wraps the bench line: its artifact is
-        # {"n": ..., "tail": "<stdout tail>", "parsed": {<bench line>}}.
-        # A bare bench line (this script's own output) is also accepted.
-        if "queries" not in data and isinstance(data.get("parsed"), dict):
-            data = data["parsed"]
-        q = data.get("queries", {})
-        return {k: float(v) for k, v in q.items()}
-    except (OSError, ValueError, TypeError):
-        return {}
+    here = here or os.path.dirname(os.path.abspath(__file__))
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+    for path in sorted(glob.glob(os.path.join(here, "BENCH_r*.json")), reverse=True):
+        try:
+            with open(path) as f:
+                art = json.load(f)
+            # A round artifact wraps the bench line:
+            # {"cpus": ..., "tail": "<stdout tail>", "parsed": {<bench line>}}.
+            # A bare bench line (this script's own output) is also accepted.
+            data = art
+            if "queries" not in art and isinstance(art.get("parsed"), dict):
+                data = art["parsed"]
+            if str(art.get("cpus", data.get("cpus"))) != str(cpus):
+                continue
+            if data.get("load_polluted"):
+                continue
+            return {k: float(v) for k, v in data.get("queries", {}).items()}
+        except (OSError, ValueError, TypeError, AttributeError):
+            continue
+    return {}
 
 
 def main() -> None:

@@ -97,10 +97,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return hits / F.greatest(F.size(t), F.lit(1))
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    return {lg: stopword_ratio(text, lg) for lg in LANG_MARKERS}
-
-
 def quality_score(text: Column) -> Column:
     """Composite document-quality heuristic in [0,1]:
     length component (saturating at 200 tokens), mean-token-length component

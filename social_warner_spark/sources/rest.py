@@ -8,10 +8,13 @@ surfaces replace it:
   PARTITION — page fetches run on executors in parallel, nothing is
   concatenated in driver memory.  The fetcher is addressed by module path
   (must be importable on executors) because DataSource options are strings.
-- `read_paged`: driver-side fallback for clients that can't plan partition
-  counts up front (unknown page count, sequential cursors).  Still avoids
-  one giant concat: each page becomes an Arrow-backed DataFrame and the
-  union is a metadata operation.
+- `read_paged`: driver-side reader for clients that can't plan partition
+  counts up front (unknown page count, sequential cursors).  Each fetched
+  page becomes one Arrow record batch; the batches reach Spark as one Arrow
+  table and are decoded in the JVM (``ArrowConverters``), so no action on
+  the result starts a Python worker.  Rows are first checked by the same
+  verifier ``createDataFrame(rows, schema)`` runs and rendered the way it
+  renders them (see `read_paged`).
 
 Auth/secret retrieval (reference utils.py:78-92) is a driver concern:
 `resolve_credentials` runs a pluggable CredentialProvider ONCE on the
@@ -28,10 +31,10 @@ import json
 import os
 from typing import Callable, Iterable, Iterator, Mapping, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
-
-from social_warner_spark.operators.transforms import union_pages
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _create_converter, _make_type_verifier
 
 try:  # Spark 4 Python DataSource API
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
@@ -155,14 +158,50 @@ def read_paged(
     fetch_pages: Callable[[], Iterable[Iterable[dict]]],
     schema: StructType | str,
 ) -> DataFrame | None:
-    """Driver-side paginated read: generator of pages → unioned DataFrame.
+    """Driver-side paginated read: generator of pages → one DataFrame.
+
+    Each non-empty page is built into one ``pyarrow.RecordBatch`` against
+    ``to_arrow_schema(schema)``; the batches go to Spark as one Arrow table,
+    which the JVM decodes.  An extract under
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a local
+    relation in the plan; a larger one is parallelized one batch (page) per
+    partition.  Either way no action on the result runs a Python worker.
+    Empty pages add no batch: they hold no rows, and Spark's local-relation
+    decode stops at the first empty batch, dropping every page after it.
+
+    Verify-then-render contract, so the result equals
+    ``spark.createDataFrame(rows, schema)``: every row first passes that
+    call's verifier (``verifySchema=True``), which rejects e.g. ``"ab"`` for
+    ``array<string>`` and ``1.0`` or ``True`` for ``long`` (Arrow would take
+    them), then goes through its converter, which renders accepted non-str
+    values in string fields as ``str(v)`` (bools lowercase).  Missing keys
+    become nulls and extra keys are dropped.  Values then take the row
+    path's internal form (``schema.toInternal``: dates as epoch days,
+    timestamps as UTC microseconds with naive ones read in local time),
+    which the Arrow arrays hold as is.  A DDL-string ``schema`` is parsed
+    with ``StructType.fromDDL``.
 
     Returns None when the source yields no pages (reference skip-empty
     semantics, main.py:80-85).
     """
-    frames = [
-        spark.createDataFrame(list(page), schema=schema) for page in fetch_pages()
-    ]
-    if not frames:
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    arrow_schema = to_arrow_schema(schema)
+    batches, pages = [], 0
+    for page in fetch_pages():
+        pages += 1
+        rows = []
+        for obj in page:
+            verify(obj)
+            rows.append(schema.toInternal(convert(obj)))
+        if rows:
+            columns = zip(*rows)
+            batches.append(pa.RecordBatch.from_arrays(
+                [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+                schema=arrow_schema,
+            ))
+    if not pages:
         return None
-    return union_pages(frames)
+    return spark.createDataFrame(pa.Table.from_batches(batches, arrow_schema), schema=schema)

@@ -156,3 +156,39 @@ def test_load_guard_still_busy_marks_polluted():
         sleep=lambda s: None, max_waits=1,
     )
     assert (polluted, la) == (True, 6.1)
+
+
+def test_history_entry_is_a_deep_copy_of_the_record():
+    # A later edit to the run's record (or to the merged top level) must
+    # not rewrite the history ring's copy of that run.
+    record = {"metric": "m", "queries": {"q": 1.0}}
+    merged = merge_detail({}, record)
+    record["queries"]["q"] = 5.0
+    merged["queries"]["q"] = 9.0
+    assert merged["runs_history"][-1]["queries"] == {"q": 1.0}
+
+
+def _write_artifact(dirpath, name, cpus, queries, polluted=False):
+    import json
+
+    art = {
+        "n": 1, "rc": 0, "cpus": cpus, "sf": "0.1", "tail": "",
+        "parsed": {"queries": queries, "load_polluted": polluted},
+    }
+    (dirpath / name).write_text(json.dumps(art))
+
+
+def test_previous_medians_pick_newest_clean_artifact_at_same_cpus(tmp_path):
+    """The newest artifact (BENCH_r11_c8.json, 8 cores, polluted) is no
+    baseline for a 32-core sweep; the newest clean 32-core one is."""
+    from bench import _previous_round_medians
+
+    _write_artifact(tmp_path, "BENCH_r10.json", 32, {"q": 1.0})
+    _write_artifact(tmp_path, "BENCH_r10_c8.json", 8, {"q": 2.0})
+    _write_artifact(tmp_path, "BENCH_r11.json", 32, {"q": 3.0})
+    _write_artifact(tmp_path, "BENCH_r11_c8.json", 8, {"q": 4.0}, polluted=True)
+    _write_artifact(tmp_path, "BENCH_r12.json", 32, {"q": 5.0}, polluted=True)
+    (tmp_path / "BENCH_r13.json").write_text("{not json")
+    assert _previous_round_medians("32", str(tmp_path)) == {"q": 3.0}
+    assert _previous_round_medians("8", str(tmp_path)) == {"q": 2.0}
+    assert _previous_round_medians("4", str(tmp_path)) == {}

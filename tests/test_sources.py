@@ -1,10 +1,15 @@
 """Paginated REST source tests (A1): Spark 4 Python DataSource with one
-partition per page + driver-side fallback."""
+partition per page + the driver-side Arrow reader `read_paged`, checked
+against the row path ``createDataFrame(rows, schema)``."""
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 
+import pytest
+from pyspark.errors import PySparkTypeError
 from pyspark.sql.types import StructType
 
 from social_warner_spark.sources import PagedRestDataSource, read_paged
@@ -46,6 +51,117 @@ def test_driver_side_fallback_union(spark):
 
 def test_driver_side_fallback_empty_returns_none(spark):
     assert read_paged(spark, lambda: iter(()), SCHEMA_DDL) is None
+
+
+PARITY_DDL = "id long, tags array<string>, label string, score double"
+
+PARITY_PAGES = [
+    [
+        {"id": 1, "tags": None, "label": 1, "score": 0.5},
+        {"id": 2, "tags": [], "label": 1.5, "score": None},
+        {"id": 3, "tags": ("a", "b"), "label": True},  # missing key: score
+        {"id": 4, "tags": ["x", None], "label": False, "score": 2.0, "extra": 9},
+    ],
+    [],  # an empty page between two non-empty pages
+    [
+        {"id": 5, "label": 1e20},  # missing keys: tags, score
+        {"id": 6, "tags": ["y"], "label": b"raw"},
+        {"id": 7, "label": {"k": [1, True]}},
+        {"id": None, "tags": ["z"], "label": "plain", "score": -1.25},
+    ],
+]
+
+
+TYPED_DDL = (
+    "d date, ts timestamp, ntz timestamp_ntz, dec decimal(10,2), bin binary, "
+    "m map<string,int>, st struct<x: int, y: string>, al array<long>"
+)
+
+TYPED_PAGES = [
+    [
+        {
+            "d": datetime.date(2024, 1, 2),
+            "ts": datetime.datetime(2024, 1, 2, 3, 4, 5, 6),
+            "ntz": datetime.datetime(2024, 1, 2, 3, 4, 5),
+            "dec": decimal.Decimal("1.50"),
+            "bin": b"ab",
+            "m": {"k": 1, "z": None},
+            "st": {"x": 1, "y": 2},
+            "al": [1, None],
+        }
+    ],
+    [
+        {
+            "ts": datetime.datetime(2024, 6, 1, tzinfo=datetime.timezone.utc),
+            "bin": bytearray(b"x"),
+            "st": (3, "q"),
+        }
+    ],
+]
+
+
+@pytest.mark.parametrize(
+    "ddl, pages, as_struct",
+    [
+        (PARITY_DDL, PARITY_PAGES, False),
+        (PARITY_DDL, PARITY_PAGES, True),
+        (TYPED_DDL, TYPED_PAGES, True),
+    ],
+    ids=["ddl", "struct", "typed"],
+)
+def test_read_paged_matches_row_path(spark, ddl, pages, as_struct):
+    """read_paged equals the row-path oracle ``createDataFrame(rows, schema)``
+    row for row: non-str values in string columns render the same way, and
+    dates, timestamps, decimals, binary, maps and structs take the row
+    path's internal form before they reach Arrow."""
+    schema = StructType.fromDDL(ddl) if as_struct else ddl
+    oracle = spark.createDataFrame([r for page in pages for r in page], schema)
+    df = read_paged(spark, lambda: iter(pages), schema)
+    assert df.schema == oracle.schema
+    assert df.collect() == oracle.collect()
+
+
+@pytest.mark.parametrize(
+    "ddl, row",
+    [
+        ("tags array<string>", {"tags": "ab"}),
+        ("id long", {"id": 1.0}),
+        ("id long", {"id": True}),
+    ],
+    ids=["str-in-array", "float-in-long", "bool-in-long"],
+)
+def test_read_paged_rejects_what_row_path_rejects(spark, ddl, row):
+    """Arrow would accept these (``"ab"`` -> ["a","b"], 1.0 -> 1); the row
+    path's verifier rejects them, and so must read_paged."""
+    with pytest.raises(PySparkTypeError):
+        spark.createDataFrame([row], ddl)
+    with pytest.raises(PySparkTypeError):
+        read_paged(spark, lambda: iter([[row]]), ddl)
+
+
+@pytest.mark.parametrize("parallelized", [False, True], ids=["local-relation", "parallelized"])
+def test_read_paged_runs_no_python_worker(spark, parallelized):
+    """Neither decode path puts a PythonRDD in the plan.  Below
+    ``arrow.localRelationThreshold`` the pages become a local relation;
+    above it (forced here with a 0 threshold) each non-empty page is one
+    partition."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    default = spark.conf.get(key)
+    spark.conf.set(key, "0" if parallelized else default)
+    try:
+        df = read_paged(spark, lambda: iter(PARITY_PAGES), PARITY_DDL)
+    finally:
+        spark.conf.set(key, default)
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    if parallelized:
+        assert df.rdd.getNumPartitions() == sum(1 for page in PARITY_PAGES if page)
+    assert df.count() == sum(len(page) for page in PARITY_PAGES)
+
+
+def test_read_paged_all_pages_empty_gives_empty_frame(spark):
+    df = read_paged(spark, lambda: iter([[], []]), SCHEMA_DDL)
+    assert df is not None and df.isEmpty()
+    assert df.columns == ["page", "item_id", "name"]
 
 
 def test_credentials_resolved_into_options(monkeypatch):
