@@ -1,36 +1,62 @@
-"""Registry for persisted intermediate DataFrames.
+"""Registry for materialized intermediate DataFrames.
 
-Operators that persist multi-consumer intermediates (shingle relations,
-corpus survivor sets) register them here because the persisted lineage is
-baked into a lazily-returned DataFrame — the operator itself can never know
-when it is safe to unpersist.  Hosts with session lifecycle knowledge
-(bench between queries, services between batches) call
-``release_persisted_intermediates()`` once results are materialized.
+Operators that share an intermediate between several consumers (shingle
+relations, corpus survivor sets, edge tables) build it once with
+``materialize()``: an eager ``localCheckpoint`` whose blocks are
+registered here.  The operator returns a lazy DataFrame that still reads
+those blocks, so it can never know when they are safe to drop.  Hosts
+with session lifecycle knowledge (bench between queries, services between
+batches) call ``release_persisted_intermediates()`` before building the
+next query — never between building a DataFrame and collecting it, since
+a released checkpoint cannot be re-read.
 
-Unreleased entries are bounded by the session lifetime (Spark drops caches
-with the session), so forgetting to release degrades memory headroom, not
+Why a checkpoint and not ``persist()``: under AQE every scan of a cached
+relation is its own ``TableCacheQueryStage``, the exchanges above two such
+scans are never reused, and the cached plan keeps its 32 shuffle
+partitions for every later read.  A checkpoint is a plain RDD leaf, so
+AQE sizes its reads and reuses the exchanges above it.  Its blocks live
+on the executors that computed them; on a cluster that can lose
+executors, reliable ``checkpoint()`` is the fault-tolerant variant.
+
+Query-level ``persist()`` sites still register through
+``register_persisted``.  Unreleased entries are bounded by the session
+lifetime, so forgetting to release degrades memory headroom, not
 correctness.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 
-_PERSISTED: list[DataFrame] = []
+_RELEASES: list[Callable[[], object]] = []
 
 
 def register_persisted(df: DataFrame) -> DataFrame:
-    _PERSISTED.append(df)
+    _RELEASES.append(df.unpersist)
     return df
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` now, once, and return a frame that reads the result.
+
+    The checkpoint's blocks are registered for release; the returned
+    frame must not be read after ``release_persisted_intermediates()``.
+    """
+    cp = df.localCheckpoint(eager=True)
+    rdd = cp._jdf.queryExecution().analyzed().rdd()
+    _RELEASES.append(lambda: rdd.unpersist(True))
+    return cp
+
+
 def release_persisted_intermediates() -> int:
-    """Unpersist every registered intermediate; returns how many."""
+    """Free every registered intermediate; returns how many."""
     n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
+    while _RELEASES:
+        release = _RELEASES.pop()
         try:
-            df.unpersist()
+            release()
             n += 1
         except Exception:
             pass

@@ -28,21 +28,46 @@ def prepare_corpus(
     docs: DataFrame,
     min_quality: float = 0.3,
     jaccard_threshold: float = 0.8,
-    decon_shingle_n: int | None = None,
-):
+) -> DataFrame:
     """documents(doc_id, text, lang, …) → deduplicated, quality-filtered
-    corpus with per-doc stats: (doc_id, lang, n_tokens, quality).
+    corpus with per-doc stats: (doc_id, lang, n_tokens, quality)."""
+    return _prepare(docs, min_quality, jaccard_threshold)[0]
 
-    With ``decon_shingle_n`` (r11, the x31 flagship device), returns the
-    pair ``(prepared, decon_shingles)`` where ``decon_shingles`` is the
-    per-doc-distinct (doc_id, shingle) relation at that width over the
-    EXACT-DEDUP SURVIVOR set — generated in the SAME tokenize+explode
-    pass as the near-dup prune's 3-gram shingles (one shared persisted
-    multi-width relation instead of two full text-splitting passes over
-    the corpus).  The survivor set is a superset of ``prepared``'s docs;
-    callers that anti-join ``prepared`` by doc_id against a predicate of
-    ``decon_shingles`` get identical results (extra doc_ids are inert in
-    the anti-join) without re-scanning and re-splitting the corpus."""
+
+def prepare_corpus_with_shingles(
+    docs: DataFrame,
+    decon_shingle_n: int,
+    min_quality: float = 0.3,
+    jaccard_threshold: float = 0.8,
+) -> tuple[DataFrame, DataFrame]:
+    """``prepare_corpus`` plus the per-doc-distinct (doc_id, shingle)
+    relation at width ``decon_shingle_n`` over the EXACT-DEDUP SURVIVOR
+    set (r11, the x31 flagship device): one narrow explode over the
+    already-materialized survivors instead of the caller's corpus re-scan
+    + survivor semi-join + re-tokenize.  The survivor set is a superset of
+    the prepared docs; callers that anti-join the prepared frame by doc_id
+    against a predicate of the shingles get identical results (extra
+    doc_ids are inert in the anti-join).
+
+    Deliberately NOT a combined (3, 4)-width shingle relation shared with
+    the near-dup prune: that variant was built and measured 0.5-0.7 s
+    SLOWER at sf0.1 (OPTIMIZATION_r11.md, x31 section) — materializing the
+    4-gram rows next to the 3-gram ones doubles the relation that the
+    prune's self-join + sizes re-read, and at 100 TB materializing a
+    single-consumer n-gram relation costs more than streaming it into its
+    one broadcast join."""
+    from social_warner_spark.operators.dedup import doc_shingles
+
+    prepared, kept = _prepare(docs, min_quality, jaccard_threshold)
+    return prepared, doc_shingles(kept, n=decon_shingle_n)
+
+
+def _prepare(
+    docs: DataFrame, min_quality: float, jaccard_threshold: float
+) -> tuple[DataFrame, DataFrame]:
+    """(prepared, exact-dedup survivors)."""
+    from social_warner_spark.caching import materialize
+
     scored = docs.withColumn("quality", quality_score(F.col("text")))
     gated = scored.where(F.col("quality") >= min_quality)
 
@@ -53,29 +78,10 @@ def prepare_corpus(
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    # kept feeds two consumers (the shingle pipeline and the final
-    # anti-join output); persisting cuts the quality-score/regex lineage
-    # from being recomputed per consumer.  Registered for host-controlled
-    # release (caching.py) since the lineage is baked into the lazy result.
-    from social_warner_spark.caching import register_persisted
-
-    kept = register_persisted(gated.join(survivors, "doc_id", "left_semi").persist())
-
-    decon_sh = None
-    if decon_shingle_n is not None:
-        from social_warner_spark.operators.dedup import doc_shingles
-
-        # One narrow explode over the ALREADY-PERSISTED survivor set —
-        # replaces the caller's corpus re-scan + survivor semi-join +
-        # re-tokenize.  Deliberately NOT a combined (3, 4)-width shingle
-        # relation shared with the prune below: that variant was built
-        # and measured 0.5-0.7 s SLOWER at sf0.1 (OPTIMIZATION_r11.md,
-        # x31 section) — persisting the 4-gram rows next to the
-        # 3-gram ones doubles the cached relation that the prune's
-        # self-join + sizes re-read, and at 100 TB materializing a
-        # single-consumer n-gram relation costs more than streaming it
-        # into its one broadcast join.
-        decon_sh = doc_shingles(kept, n=decon_shingle_n)
+    # kept feeds the shingle pipeline and the final anti-join output (and
+    # the decontamination shingles); materializing cuts the
+    # quality-score/regex lineage from being recomputed per consumer.
+    kept = materialize(gated.join(survivors, "doc_id", "left_semi"))
 
     # near-dup prune: drop the b side of every (a < b) pair
     dropped = (
@@ -91,9 +97,7 @@ def prepare_corpus(
         token_count_ws(F.col("text")).alias("n_tokens"),
         "quality",
     )
-    if decon_shingle_n is None:
-        return prepared
-    return prepared, decon_sh
+    return prepared, kept
 
 
 def per_group_cap(
@@ -143,7 +147,7 @@ def dsir_select(
     unseen buckets finite; 6dp rounding keeps the ranking cross-engine
     stable.
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
     from social_warner_spark.functions.text import tokens
 
     def bucketed(df: DataFrame) -> DataFrame:
@@ -162,7 +166,7 @@ def dsir_select(
             ).cast("int").alias("bk"),
         )
 
-    raw_tok = register_persisted(bucketed(raw).persist())
+    raw_tok = materialize(bucketed(raw))
     tgt_tok = bucketed(target)
 
     def smoothed(tok: DataFrame, p_name: str) -> DataFrame:

@@ -150,7 +150,7 @@ def exact_jaccard_pairs(
 
     Plan: per-doc-distinct (id, shingle) rows → self equi-join on
     shingle (shuffle on shingle) → count shared per pair → attach
-    per-doc sizes (one small agg over the cached relation, joined onto
+    per-doc sizes (one small agg over the materialized relation, joined onto
     the PAIR relation) → SIZE-RATIO FILTER (J ≥ t requires
     min(|A|,|B|) ≥ t·max(|A|,|B|) — a necessary condition, so applying
     it before the final threshold changes nothing) →
@@ -158,13 +158,17 @@ def exact_jaccard_pairs(
 
     The sizes attach AFTER the pair aggregation (r10): with no size
     columns on the join inputs, the two sides of the self-join are
-    structurally identical (same Project over the same persisted
-    shingle relation), so Spark's ReuseExchange collapses their two
-    Exchanges into ONE — the corpus-sized shingle relation is shuffled
-    once, not twice, and the sizes joins touch only the (a, b, shared)
-    pair relation, which the map-side partial aggregation has already
-    compacted.  Measured at sf0.1: 12 → 10 Exchanges, l2 core
-    2.06 s → 1.25 s median, byte-identical output.  The self-join
+    structurally identical (same Project over the same materialized
+    shingle relation), so AQE reuses one side's Exchange for the other
+    (a ReusedExchange in the executed plan) — the corpus-sized shingle
+    relation is shuffled once, not twice, and the sizes joins touch only
+    the (a, b, shared) pair relation, which the map-side partial
+    aggregation has already compacted.  Measured at sf0.1: 12 → 10
+    Exchanges, l2 core 2.06 s → 1.25 s median, byte-identical output.
+    While the relation was a ``persist()``, that reuse held only in the
+    static plan: at run time AQE put each side's scan in its own
+    TableCacheQueryStage and shuffled it twice (tests/test_caching.py
+    pins the run-time reuse).  The self-join
     carries an explicit SHUFFLE_MERGE hint: its two sides are the same
     relation, so a broadcast (what AQE picks from small-SF size
     estimates) builds a driver-side hash relation of the whole corpus —
@@ -184,15 +188,13 @@ def exact_jaccard_pairs(
     bounded per-shingle cost of max_doc_freq².
 
     The shingle relation is consumed multiple times (join sides + sizes
-    + re-score); persisting it turns the explode recomputations into
-    one.  At cluster scale the equivalent is staging it to a temp
-    table — the lineage cut matters more than the storage level.  The
-    persisted handle is registered for host-controlled release (see
-    caching.py).
+    + re-score); materializing it (caching.materialize, registered for
+    host-controlled release) turns the explode recomputations into
+    one.
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
-    sh = register_persisted(doc_shingles(df, text_col, id_col, n).persist())
+    sh = materialize(doc_shingles(df, text_col, id_col, n))
     # Per-doc sizes are a |docs|-row relation — CORPUS-sized at 100 TB,
     # so the join side choice belongs to AQE (an explicit F.broadcast
     # here would bypass autoBroadcastJoinThreshold and OOM where AQE
@@ -417,7 +419,7 @@ def minhash_signatures(
     shingles: DataFrame | None = None,
 ) -> DataFrame:
     """One row per doc: id + mh_0..mh_{k-1}.  Single shuffle on id; the k
-    mins are partial-aggregated map-side.  Pass a precomputed (persisted)
+    mins are partial-aggregated map-side.  Pass a precomputed (materialized)
     ``shingles`` relation when the caller also consumes it elsewhere —
     avoids re-running the explode+distinct lineage."""
     sh = shingles if shingles is not None else doc_shingles(df, text_col, id_col, n)
@@ -518,10 +520,10 @@ def minhash_neardup_pairs(
     the identical 6dp-rounded exact Jaccard.
 
     The shingle relation feeds signatures, sizes, AND the rescore —
-    persisted once (registered for host release, caching.py)."""
-    from social_warner_spark.caching import register_persisted
+    materialized once (registered for host release, caching.py)."""
+    from social_warner_spark.caching import materialize
 
-    sh = register_persisted(doc_shingles(df, text_col, id_col, n).persist())
+    sh = materialize(doc_shingles(df, text_col, id_col, n))
     cands = lsh_candidate_pairs(
         minhash_signatures(df, num_hashes, text_col, id_col, n, shingles=sh),
         bands,
@@ -579,12 +581,12 @@ def incremental_neardup_matches(
     exact verification then touches only candidate corpus docs' shingles
     (two equi-joins, candidates × shingles rows).
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
     # each shingle relation feeds three consumers (signatures, verification
-    # join, sizes) — persist once, same as exact_jaccard_pairs
-    sh_n = register_persisted(doc_shingles(new, text_col, id_col, n).persist())
-    sh_c = register_persisted(doc_shingles(corpus, text_col, id_col, n).persist())
+    # join, sizes) — materialize once, same as exact_jaccard_pairs
+    sh_n = materialize(doc_shingles(new, text_col, id_col, n))
+    sh_c = materialize(doc_shingles(corpus, text_col, id_col, n))
     sig_n = minhash_signatures(new, num_hashes, text_col, id_col, n, shingles=sh_n)
     sig_c = minhash_signatures(corpus, num_hashes, text_col, id_col, n, shingles=sh_c)
 
@@ -807,19 +809,17 @@ def semantic_dedup(
     skew risk — AQE skew-join splits it, and raising nlist shrinks it
     structurally.
 
-    The assignment is persisted: it feeds both sides of the pair join and
+    The assignment is materialized: it feeds both sides of the pair join and
     the final anti-join, and each recomputation would redo the centroid
     cross-score.
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
     from social_warner_spark.operators.similarity import ivf_assign, ivf_centroids
 
-    centroids = register_persisted(
-        ivf_centroids(corpus, nlist, iters, vec_col, id_col).persist()
-    )
-    assigned = register_persisted(
-        ivf_assign(corpus, centroids, vec_col, id_col).persist()
-    )
+    # The centroids' only consumer is this materialization, which runs
+    # their Lloyd fit once.
+    centroids = ivf_centroids(corpus, nlist, iters, vec_col, id_col)
+    assigned = materialize(ivf_assign(corpus, centroids, vec_col, id_col))
     from social_warner_spark.functions.vectors import cosine_prenormed, scoring_vec
 
     a = assigned.select(
@@ -865,12 +865,12 @@ def containment_pairs(
     but containment 1.0), which symmetric Jaccard — and its size-ratio
     candidate prefilter — deliberately ignores.
 
-    Same persisted-shingle machinery as exact_jaccard_pairs, but NO
+    Same materialized-shingle machinery as exact_jaccard_pairs, but NO
     size-ratio pruning (size-mismatched pairs are the whole point); the
     optional ``max_doc_freq`` hot-shingle drop is the skew knob here
     too.  Shuffle ∝ shared-shingle candidate pairs.
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
     sh = doc_shingles(df, text_col, id_col, n)
     if max_doc_freq is not None:
@@ -881,7 +881,7 @@ def containment_pairs(
             .select("shingle")
         )
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
-    sh = register_persisted(sh.persist())
+    sh = materialize(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     a, b = sh.alias("a"), sh.alias("b")
     shared = (
@@ -938,9 +938,9 @@ def prefix_filter_jaccard_pairs(
     sorted per-doc shingle arrays (array_intersect per candidate, like
     triangle_count's adjacency intersect) — per-pair cost O(|A|+|B|),
     no second shingle shuffle."""
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
-    sh = register_persisted(doc_shingles(df, text_col, id_col, n).persist())
+    sh = materialize(doc_shingles(df, text_col, id_col, n))
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     ranked = (

@@ -10,10 +10,10 @@ the DuckDB oracle unrolls the same three iterations as chained CTEs.
 
 Companion to operators/dedup.py:neardup_clusters (min-label propagation,
 the other iterative-join operator); see PERF.md for the shared scale
-notes: edges+outdeg are persisted once and reused by every iteration,
-each iteration is one shuffle (groupBy dst), and the rank table — one
-row per node — is orders of magnitude smaller than the edge table, which
-never re-shuffles after its first partitioning.
+notes: edges+outdeg are materialized once (caching.materialize) and
+reused by every iteration, each iteration is one shuffle (groupBy dst),
+and the rank table — one row per node — is orders of magnitude smaller
+than the edge table.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from social_warner_spark.caching import register_persisted
+from social_warner_spark.caching import materialize
 
 
 def sorted_array_pairs(arr: Column, a: str = "src", b: str = "dst") -> Column:
@@ -87,7 +87,7 @@ def pagerank_fixed(
     outdeg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     # deg is attached to edges once; the (src, dst, deg) relation is the
     # loop invariant every iteration re-reads.
-    ed = register_persisted(edges.join(outdeg, "src").persist())
+    ed = materialize(edges.join(outdeg, "src"))
     base = F.lit(round(1.0 - damping, 6))
 
     rank = nodes.select("node", F.lit(1.0).alias("pr"))
@@ -123,12 +123,10 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     co-purchase graph; measured 21.5s vs 6s for this form) never exists.
     Two equi-join shuffles attach the adjacency arrays; per-edge
     intersect cost is O(outdeg(u)+outdeg(v))."""
-    from social_warner_spark.caching import register_persisted
-
     # edges feeds degree (twice, via the union), orientation, and the
-    # n_edges count — persist or the upstream edge construction (often a
+    # n_edges count — materialize or the upstream edge construction (often a
     # self-join + distinct) re-runs once per consumer.
-    edges = register_persisted(edges.persist())
+    edges = materialize(edges)
     deg = (
         edges.select(F.col(src).alias("n"))
         .unionAll(edges.select(F.col(dst).alias("n")))
@@ -145,11 +143,11 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     src_first = (F.col("_ds") < F.col("_dd")) | (
         (F.col("_ds") == F.col("_dd")) & (F.col(src) < F.col(dst))
     )
-    oriented = register_persisted(
+    oriented = materialize(
         with_deg.select(
             F.when(src_first, F.col(src)).otherwise(F.col(dst)).alias("u"),
             F.when(src_first, F.col(dst)).otherwise(F.col(src)).alias("v"),
-        ).persist()
+        )
     )
     adj = oriented.groupBy(F.col("u").alias("n")).agg(
         F.collect_list("v").alias("nbrs")
@@ -193,24 +191,29 @@ def lpa_fixed(nodes: DataFrame, edges: DataFrame, iters: int = 3) -> DataFrame:
     operator oracle-checkable (the DuckDB oracle unrolls the identical
     rounds as chained CTEs).
 
-    Scale: the edge relation is persisted once, PRE-PARTITIONED on dst
-    (r11) so every round's edges ⋈ labels join reuses the cached
-    partitioning instead of re-exchanging |E| rows per round; each round
-    is then that join plus ONE |E|-row exchange — the vote relation is
+    Scale: the edge relation is materialized once (caching.materialize)
+    and every round's label relation (one row per node) too, so round k
+    joins a checkpoint, not round k-1's lineage.  The vote relation is
     re-keyed to its destination node up front, and the (node,label)
     count, the per-node top-1, and the labels update all reuse that same
     HashPartitioning(node) (hash on a prefix of the grouping keys
     satisfies the clustered distributions — guide §2.4 "two operations
     keyed the same way can share one exchange").  The r10 shape paid
-    three keyed shuffles per round ((src,lbl) votes, node top-1, node
-    join); measured interleaved on x239's graph: 4.0 → 3.2 s at sf0.1
-    (plans/r11/ab_lpa.out), identical output.  The label relation (one
-    row per node) is persisted per round so round k joins a
-    materialisation, not round k-1's lineage.
-    """
-    from social_warner_spark.caching import register_persisted
+    three keyed shuffles per round for those ((src,lbl) votes, node
+    top-1, node join); measured interleaved on x239's graph: 4.0 → 3.2 s
+    at sf0.1 (plans/r11/ab_lpa.out), identical output.
 
-    ed = register_persisted(edges.repartition("dst").persist())
+    Trade-off: a checkpoint leaf reports UnknownPartitioning, and its
+    size estimate is the estimate of the plan that built it (a product
+    over joins, far above the real node count), so the edges are no
+    longer pre-partitioned on dst and the labels are not broadcast:
+    every round also exchanges the |E| edge rows and the labels on dst,
+    and the labels on node for the update join.  On x239's graph at
+    sf0.01 a round now runs ~8 tasks instead of ~129 (no 32-partition
+    cache reads) and writes about twice the shuffle bytes; PERF.md
+    "Current state — shared intermediates" has the counts.
+    """
+    ed = materialize(edges)
     labels = nodes.select("node", F.col("node").alias("lbl"))
     for i in range(iters):
         if i == 0:
@@ -240,7 +243,7 @@ def lpa_fixed(nodes: DataFrame, edges: DataFrame, iters: int = 3) -> DataFrame:
         # top-1 per node as a hash aggregation, not a window: min over the
         # (-count, label) struct = max count with min-label tie-break —
         # saves the per-round partition sort.  (An isolated-node-set-
-        # union variant that drops the per-round persist was measured
+        # union variant that drops the per-round materialize was measured
         # SLOWER — the union erases the agg's hash partitioning, forcing
         # a full label re-shuffle every round; see PERF.md.)
         best = votes.groupBy("node").agg(
@@ -248,12 +251,10 @@ def lpa_fixed(nodes: DataFrame, edges: DataFrame, iters: int = 3) -> DataFrame:
                 "new_lbl"
             )
         )
-        labels = register_persisted(
-            labels.join(best, "node", "left")
-            .select(
+        labels = materialize(
+            labels.join(best, "node", "left").select(
                 "node",
                 F.coalesce(F.col("new_lbl"), F.col("lbl")).alias("lbl"),
             )
-            .persist()
         )
     return labels

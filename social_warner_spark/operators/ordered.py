@@ -60,19 +60,21 @@ def _require_integral(df: DataFrame, cols: list[str], who: str) -> None:
 def _range_staged(df: DataFrame, order_cols: list, num_partitions: int | None):
     """repartitionByRange + ascending partition id column ``_pid``.
 
-    PERSISTED (and registered for host release): the boundary-relation
-    collect and the final compute must read the SAME materialization —
-    range-bound sampling re-runs per execution, so without the pin the
-    two passes could see different partitionings and the broadcast
-    offsets would label the wrong rows."""
-    from social_warner_spark.caching import register_persisted
+    MATERIALIZED (caching.materialize, registered for host release): the
+    boundary-relation collect and the final compute must read the SAME
+    rows — range-bound sampling re-runs per execution, so without the
+    pin the two passes could see different partitionings and the
+    broadcast offsets would label the wrong rows.  A checkpoint is
+    computed exactly once; a ``persist()`` recomputes from the lineage if
+    a cached block is evicted, so it only made the pin likely."""
+    from social_warner_spark.caching import materialize
 
     spark = df.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     staged = df.repartitionByRange(p, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )
-    return register_persisted(staged.persist())
+    return materialize(staged)
 
 
 def _ranked_with_total(
@@ -178,7 +180,7 @@ def with_global_cumsum(
     srcs = sorted(set(sum_cols.values()))
     _require_integral(df, srcs, "with_global_cumsum")
     # the type check above needs only df.schema — running it first means
-    # the TypeError path never leaves a registered persisted staged
+    # the TypeError path never leaves a registered materialized staged
     # relation behind (ADVICE r06).
     staged = _range_staged(df, order_cols, num_partitions)
     totals = {

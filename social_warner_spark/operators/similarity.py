@@ -262,14 +262,12 @@ def cosine_topk_ivf(
     the pipeline itself is deterministic (seeded centroids, rounded means)
     and therefore fully oracle-checkable.
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
     # nlist rows, but the lineage behind them is `iters + 1` corpus passes
-    # — persist so the two consumers (corpus assignment, probe routing)
+    # — materialize so the two consumers (corpus assignment, probe routing)
     # don't each re-run the Lloyd fit
-    centroids = register_persisted(
-        ivf_centroids(corpus, nlist, iters, vec_col, id_col).persist()
-    )
+    centroids = materialize(ivf_centroids(corpus, nlist, iters, vec_col, id_col))
     assigned = ivf_assign(corpus, centroids, vec_col, id_col)
 
     from social_warner_spark.functions.vectors import cosine_prenormed, l2_norm, scoring_vec
@@ -457,7 +455,16 @@ def pq_encode(
     groupBy(id) collect_list` pair computed, because `min` ignores the
     NULLs from other subspaces and orders the struct lexicographically —
     same tie-break, one Exchange instead of two, and a plain
-    HashAggregate instead of the ObjectHashAggregate collect_list."""
+    HashAggregate instead of the ObjectHashAggregate collect_list.
+
+    ``books`` must hold at least one codeword for every subspace in
+    ``range(m)``; a missing subspace would leave a NULL inside every code
+    array, so it raises ``ValueError`` (one small job over the
+    m·ncode-row codebook)."""
+    present = {r["sub"] for r in books.select("sub").distinct().collect()}
+    missing = sorted(set(range(m)) - present)
+    if missing:
+        raise ValueError(f"pq_encode: books has no codewords for subspaces {missing}")
     subs = _subvectors(corpus, m, sublen, vec_col, id_col, id_col)
     scored = subs.join(F.broadcast(books), "sub").withColumn(
         "d", F.round(_l2sq(F.col("sv"), F.col("cw"), sublen), 6)
@@ -511,11 +518,9 @@ def l2_topk_pq(
     the difference between ~0.3 and ~0.9 recall — the codes alone rank
     coarsely; the shortlist contains the true neighbors.
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
-    books = register_persisted(
-        pq_codebooks(corpus, m, ncode, sublen, iters, vec_col, id_col).persist()
-    )
+    books = materialize(pq_codebooks(corpus, m, ncode, sublen, iters, vec_col, id_col))
     codes = pq_encode(corpus, books, m, sublen, vec_col, id_col).select(
         F.col(id_col).alias("neighbor_id"), "codes"
     )

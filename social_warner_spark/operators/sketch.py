@@ -129,12 +129,10 @@ def cms_heavy_hitters(
     full distinct — the sketch answers point queries for any candidate
     set without re-scanning.
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
     from social_warner_spark.functions.text import tokens
 
-    tok = register_persisted(
-        df.select(F.explode(tokens(F.col(text_col))).alias("token")).persist()
-    )
+    tok = materialize(df.select(F.explode(tokens(F.col(text_col))).alias("token")))
     cells = cms_cells(tok, "token", depth, width)
     exact = tok.groupBy("token").agg(F.count("*").alias("exact"))
     rows = F.array(*[F.lit(r) for r in range(depth)])
@@ -383,14 +381,14 @@ def twopass_median(df: DataFrame, value_col: str, bucket_width: float = 1024.0) 
     `percentile_cont(0.5)`.
 
     Everything data-dependent flows as broadcast 1-row relations — no
-    driver collect.  At 100 TB: two scans of the persisted value
+    driver collect.  At 100 TB: two scans of the materialized value
     column, one |buckets|-row cumulative, one bucket-local sort.
     """
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
     v = F.col(value_col).cast("double")
-    rows = register_persisted(
-        df.select(v.alias("_v"), F.floor(v / bucket_width).cast("long").alias("_b")).persist()
+    rows = materialize(
+        df.select(v.alias("_v"), F.floor(v / bucket_width).cast("long").alias("_b"))
     )
     cells = rows.groupBy("_b").agg(F.count("*").alias("c"))
     w = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, 0)

@@ -19,7 +19,7 @@ as a broadcast 1-row relation (no driver collect anywhere).
 
 Scale: each round is one pair-count shuffle (map-side combined) + a
 1-row argmax (TakeOrderedAndProject) + a narrow map.  Sequences are
-persisted per round so round r+1 doesn't recompute rounds 1..r.
+materialized per round so round r+1 doesn't recompute rounds 1..r.
 """
 
 from __future__ import annotations
@@ -78,7 +78,7 @@ def encoded_lengths(
 def _merge_loop(
     docs: DataFrame, *, rounds: int, id_col: str, text_col: str
 ) -> tuple[list[DataFrame], DataFrame]:
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
     toks = tokens(F.col(text_col))
     seq = docs.where(F.trim(F.col(text_col)) != "").select(
@@ -87,7 +87,7 @@ def _merge_loop(
     )
     best_rows: list[DataFrame] = []
     for r in range(1, rounds + 1):
-        seq = register_persisted(seq.persist())
+        seq = materialize(seq)
         t = F.split(F.btrim(F.col("s"), F.lit("|")), r"\|\|")
         staged = seq.select(t.alias("t"))
         ex = staged.select(
@@ -102,12 +102,11 @@ def _merge_loop(
             F.element_at("t", F.col("i")).alias("p1"),
             F.element_at("t", F.col("i") + 1).alias("p2"),
         )
-        best = register_persisted(
+        best = materialize(
             pairs.groupBy("p1", "p2")
             .agg(F.count("*").alias("n"))
             .orderBy(F.desc("n"), "p1", "p2")
             .limit(1)
-            .persist()
         )
         best_rows.append(best.select(F.lit(r).alias("round"), "p1", "p2", "n"))
         pat = F.concat(F.lit("|"), F.col("p1"), F.lit("||"), F.col("p2"), F.lit("|"))

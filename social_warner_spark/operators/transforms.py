@@ -149,16 +149,16 @@ def global_index(
     range sampler's boundary choices never affect values.  order_exprs
     must be a total order (include a unique tiebreak column).
 
-    The staged relation is PERSISTED (registered for host release):
-    the offsets branch and the rank branch are two separate range
-    exchanges in the physical plan (verified: Catalyst does NOT reuse
-    them — column pruning makes the subtrees differ), so without the
-    pin the two branches could in principle sample different partition
-    bounds and the offsets would label the wrong partitions.  Spark's
-    samplers happen to be deterministic per input today; the persist
-    makes the single-materialization guarantee explicit instead of
-    relying on that implementation detail (same discipline as
-    operators/ordered.py).
+    The staged relation is MATERIALIZED (caching.materialize, registered
+    for host release): the offsets branch and the rank branch are two
+    separate range exchanges in the physical plan (verified: Catalyst
+    does NOT reuse them — column pruning makes the subtrees differ), so
+    without the pin the two branches could in principle sample different
+    partition bounds and the offsets would label the wrong partitions.
+    Spark's samplers happen to be deterministic per input today; the
+    eager checkpoint makes the single-materialization guarantee explicit
+    (computed once, never recomputed from lineage) instead of relying on
+    that implementation detail (same discipline as operators/ordered.py).
 
     Cost: the range exchange, the per-partition sort, and one extra hash
     exchange on the partition id (Catalyst can't see that range
@@ -173,12 +173,12 @@ def global_index(
         partitions
         or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
-    staged = register_persisted(
-        df.repartitionByRange(num, *order_exprs)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    staged = materialize(
+        df.repartitionByRange(num, *order_exprs).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     counts = staged.groupBy("_pid").agg(F.count("*").alias("_c"))
     # window over |partitions| rows — bounded, not a data-volume window

@@ -1197,9 +1197,9 @@ def x185_power_iteration(spark, sf_dir):
         .select("vec_id", F.posexplode(F.col("embedding").cast("array<double>")).alias("j0", "x"))
         .select("vec_id", (F.col("j0") + 1).alias("j"), "x")
     )
-    from social_warner_spark.caching import register_persisted
+    from social_warner_spark.caching import materialize
 
-    rows = register_persisted(rows.persist())
+    rows = materialize(rows)
     v = spark.range(1, POWER_DIM + 1).select(
         F.col("id").alias("j"), F.lit(1.0 / 8.0).alias("v")
     )

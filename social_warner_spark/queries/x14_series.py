@@ -237,7 +237,7 @@ def x239_label_propagation(spark, sf_dir):
     Scale shape: each round is one (edges ⋈ labels) equi-join + one
     (node,label) count + one per-node min_by hash aggregation — the
     same bounded-round message-passing plan family as PageRank/k-core,
-    with per-round persists so round k reads round k-1's
+    with per-round materializations so round k reads round k-1's
     materialisation, not its lineage."""
     from social_warner_spark.operators.graph import lpa_fixed
 

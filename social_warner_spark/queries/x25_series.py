@@ -41,6 +41,8 @@ EG_ROUNDS = 5
 
 
 def _lpa_graph(spark, sf_dir):
+    from social_warner_spark.caching import materialize
+
     orders = T(spark, sf_dir, "orders")
     li = T(spark, sf_dir, "lineitem")
     cust = T(spark, sf_dir, "customer").select(
@@ -50,7 +52,8 @@ def _lpa_graph(spark, sf_dir):
         (F.col("s_suppkey") * 2 + 1).alias("node")
     )
     nodes = cust.unionAll(supp)
-    e0 = (
+    # e0 feeds both edge directions, the label joins and the edge count
+    e0 = materialize(
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .select(
             (F.col("o_custkey") * 2).alias("src"),
@@ -76,15 +79,11 @@ def x307_modularity(spark, sf_dir):
     rounds); the evaluation is two label joins on the edge relation
     plus community-sized algebra."""
     from social_warner_spark.operators.graph import lpa_fixed
-    from social_warner_spark.caching import register_persisted
 
     nodes, e0, edges = _lpa_graph(spark, sf_dir)
-    e0 = register_persisted(e0.persist())
-    # |nodes| rows; eagerly cut the 3-round message-passing lineage —
-    # three downstream consumers would each embed it otherwise.
-    labels = lpa_fixed(nodes, edges, iters=LPA_ITERS).localCheckpoint(
-        eager=True
-    )
+    # lpa_fixed returns a materialized |nodes|-row relation, so its three
+    # downstream consumers read the checkpoint, not the round lineage.
+    labels = lpa_fixed(nodes, edges, iters=LPA_ITERS)
     la = labels.select(F.col("node").alias("src"), F.col("lbl").alias("cl_a"))
     lb = labels.select(F.col("node").alias("dst"), F.col("lbl").alias("cl_b"))
     within = (

@@ -383,20 +383,20 @@ def x31_full_pipeline(spark, sf_dir):
     elsewhere (x4/l1/l2/x16/x28/x29); this query proves they compose, and
     the composition is itself hash-checked against one composed SQL oracle."""
     from social_warner_spark.caching import register_persisted
-    from social_warner_spark.operators.corpus import prepare_corpus
+    from social_warner_spark.operators.corpus import prepare_corpus_with_shingles
     from social_warner_spark.operators.dedup import doc_shingles
 
     BUDGET = 512
     docs = T(spark, sf_dir, "documents")
     # r11: the near-dup prune (3-grams) and the decontamination check
     # (4-grams) share ONE tokenize+explode pass over the exact-dedup
-    # survivor set (prepare_corpus's decon_shingle_n mode) — the old
+    # survivor set (prepare_corpus_with_shingles) — the old
     # shape re-scanned documents and re-split every surviving text a
     # second time just to build the 4-gram relation.  surv4 covers the
     # exact-dedup survivors, a superset of prepared's docs; the left_anti
     # below keys on prepared's doc_ids, so the extra rows are inert and
     # the result is unchanged (oracle-mirrored at three scales).
-    prepared, surv4 = prepare_corpus(docs, decon_shingle_n=4)
+    prepared, surv4 = prepare_corpus_with_shingles(docs, 4)
     prepared = register_persisted(prepared.persist())
 
     probe_sh = (

@@ -749,6 +749,18 @@ def test_pq_ann_rerank_recall_vs_exact(spark, emb):
     )
 
 
+
+def test_pq_encode_rejects_codebook_missing_a_subspace(spark, emb):
+    """A codebook without codewords for one subspace would put a NULL in
+    every code array; pq_encode refuses it instead."""
+    from social_warner_spark.operators.similarity import pq_codebooks, pq_encode
+
+    books = pq_codebooks(emb, m=4, k=2, sublen=16, iters=0)
+    with pytest.raises(ValueError, match=r"subspaces \[2\]"):
+        pq_encode(emb, books.where(F.col("sub") != 2), m=4, sublen=16)
+    codes = pq_encode(emb, books, m=4, sublen=16).collect()
+    assert codes and all(len(r.codes) == 4 and None not in r.codes for r in codes)
+
 def test_gif_lzw_roundtrip_stress():
     """The LZW pair must survive the hard codec paths: maximal repetition
     (KwKwK chains), incompressible random streams (code-width bumps up to

@@ -70,14 +70,28 @@ def test_decontamination_broadcasts_probe_set(spark, sf_smoke):
     assert "SortMergeJoin" not in p
 
 
-def test_sequence_packing_grouped_range_stage(spark, sf_smoke):
+def test_sequence_packing_grouped_range_stage(spark, sf_smoke, monkeypatch):
     """x29's per-lang cumsum must run on the grouped range stage (r07):
     range partition on (lang, doc_id) — balanced under ANY language mix —
     followed by the balanced (pid, lang) window hash.  A bare
     hashpartitioning(lang) routes the corpus through ~|langs| reducer
     tasks (one dominant language = a single-task sort), the
-    LowCardPartitionWindow class this conversion closed."""
-    p = plan_of(spark, sf_smoke, "x29_sequence_packing")
+    LowCardPartitionWindow class this conversion closed.
+
+    The range stage is built by caching.materialize, so its exchange runs
+    in the checkpoint's own plan, not in the query's: both are checked."""
+    from social_warner_spark import caching
+
+    materialized = []
+    real = caching.materialize
+
+    def recording(df):
+        materialized.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df)
+
+    monkeypatch.setattr(caching, "materialize", recording)
+    p = "\n".join([plan_of(spark, sf_smoke, "x29_sequence_packing"), *materialized])
+    assert materialized, "x29's range stage is no longer materialized"
     assert "rangepartitioning(lang" in p, p
     assert "hashpartitioning(lang" not in p, p  # window hash leads with _pid
 
